@@ -9,11 +9,8 @@ spaces, punctuation, digits and newlines, all of which the tokenizer treats
 as non-letters.
 
 The same (seed, scale) always gives the same bytes.
-
-    python3 perfbench/gen_corpus.py <out_dir> [seed] [scale]
 """
 import os
-import sys
 
 import numpy as np
 
@@ -80,8 +77,3 @@ def write(out_dir, seed, scale):
             f.write(text)
         paths.append(path)
     return paths
-
-
-if __name__ == "__main__":
-    write(sys.argv[1], int(sys.argv[2]) if len(sys.argv) > 2 else 1,
-          float(sys.argv[3]) if len(sys.argv) > 3 else 1.0)

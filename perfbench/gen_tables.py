@@ -9,12 +9,9 @@ follow the fixture's scale rule: facts and dimensions grow with `sf`,
 
 The same (sf, seed) always yields the same bytes, so the DuckDB-oracle
 hashes stored in `expected.json` stay valid.
-
-    python3 perfbench/gen_tables.py <out_dir> [sf] [seed]
 """
 import datetime
 import os
-import sys
 
 import numpy as np
 import pyarrow as pa
@@ -150,8 +147,3 @@ def write(out_dir, sf, seed):
     for name, tbl in tables(sf, seed).items():
         pq.write_table(tbl, os.path.join(out_dir, f"{name}.parquet"),
                        row_group_size=max(1, tbl.num_rows))
-
-
-if __name__ == "__main__":
-    write(sys.argv[1], float(sys.argv[2]) if len(sys.argv) > 2 else 0.01,
-          int(sys.argv[3]) if len(sys.argv) > 3 else 42)

@@ -3,10 +3,15 @@
 Pure functions, so that the rules behind the numbers are tested on their
 own (`test_perfbench.py`).
 """
-import decimal
-import hashlib
 import math
+import os
 import statistics
+import sys
+
+# the output check hashes results exactly as the repository's oracle gate does
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                                "scripts"))
+from compare import canon_hash  # noqa: E402,F401
 
 
 def percentile(xs, p):
@@ -100,25 +105,15 @@ def unattributed_jobs(spans, ops):
     return [s for s in spans if s["kind"] == "job" and s["op"] not in ids]
 
 
-def _canon(v):
-    # mirrors scripts/compare.py: decimals compare as float64
-    if isinstance(v, decimal.Decimal):
-        v = float(v)
-    if isinstance(v, float):
-        return repr(v)
-    return str(v)
-
-
-def canon_hash(cols, rows):
-    """Row-order hash over name-sorted columns, as scripts/compare.py takes it."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    h = hashlib.sha256()
-    for row in rows:
-        for i in order:
-            h.update(_canon(row[i]).encode())
-            h.update(b"\x1f")
-        h.update(b"\x1e")
-    return h.hexdigest()
+def op_p50(ops):
+    """The median operation's latency: each operation's median over the
+    passes, then the median of those. A pass runs a few kinds of operation,
+    each many times; the median of all samples pooled would fall in the gap
+    between two kinds and move with the slowest sample of one of them."""
+    by_name = {}
+    for o in ops:
+        by_name.setdefault(o["name"], []).append((o["end"] - o["start"]) / 1e3)
+    return statistics.median(statistics.median(v) for v in by_name.values())
 
 
 def end_to_end(res):
@@ -128,10 +123,11 @@ def end_to_end(res):
     op_s = [(o["end"] - o["start"]) / 1e3 for o in ops]
     t, pct, n = tail(op_s)
     return {
-        "setup_s": (res["setup_s"], "s", 1, ""),
+        "setup_s": (res["setup_s"], "s", 1,
+                    f"{len(res['warm_round_s'])} warm-up rounds"),
         "pass_s": (statistics.median((p["end"] - p["start"]) / 1e3 for p in passes),
                    "s", len(passes), ""),
-        "op_p50_s": (statistics.median(op_s), "s", len(op_s), ""),
+        "op_p50_s": (op_p50(ops), "s", len(op_s), ""),
         "op_tail_s": (t, "s", n, f"p{pct}"),
     }
 
@@ -199,6 +195,9 @@ def per_layer(res, spans, cores):
         "spill.mb": per(st("spill_bytes") / mb),
         "scan.mb": per(st("input_bytes") / mb),
         "scan.rows": per(st("input_records")),
+        "store.write_mb": per(st("output_bytes") / mb),
+        "store.write_rows": per(st("output_records")),
+        "store.write_amp": st("output_bytes") / st("input_bytes") if st("input_bytes") else 0.0,
         "stream.triggers": per(len(trig)),
         "stream.input_rows": per(sum(s["attrs"].get("input_rows", 0.0) for s in trig)),
         "stream.trigger_p50_ms": statistics.median(trig_ms) if trig_ms else 0.0,

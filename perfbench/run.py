@@ -2,7 +2,7 @@
 """The repository's benchmark: one command that builds the engine, runs one
 workload, checks its outputs and prints every metric.
 
-    python3 perfbench/run.py --workload <mr_corpus|batch_mix|stream_maintain|all>
+    python3 perfbench/run.py --workload <mr_corpus|stream_maintain|all>
                              --seed <n> --seconds <s> --trace <0|1>
 
 Run it from the repository root. The first run builds the engine and the
@@ -23,10 +23,15 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
+# a run writes nothing outside .bench_build/ and the sbt target directories
+sys.dont_write_bytecode = True
 
 import gen_corpus  # noqa: E402
 import gen_tables  # noqa: E402
-import metrics  # noqa: E402
+try:
+    import metrics  # noqa: E402
+except ImportError as e:  # it imports the oracle gate's hash from scripts/
+    sys.exit(f"perfbench: {e}; run from the repository root")
 
 # Registry rows run at a fixed table scale: their expected results are the
 # DuckDB oracle's, stored once in expected.json (make_expected.py).
@@ -36,14 +41,8 @@ CORPUS_SCALE = 1.8
 # registry rows per workload; None runs the MapReduce apps
 WORKLOADS = {
     "mr_corpus": None,
-    "batch_mix": [
-        "dq02_wordcount", "dq03_inverted_index", "dq05_topk", "dq16_json_extract",
-        "ext_sim_ivf_topk", "ext_text_tfidf", "ext_pipeline_merge"],
-    "stream_maintain": ["ext_stream_sessionize", "ext_stream_dedup", "ext_stream_window"],
+    "stream_maintain": ["ext_stream_ingest", "ext_stream_dedup", "ext_stream_sessionize"],
 }
-# warm-up rounds at the timed data: after one, the first timed pass was
-# still slower than the rest
-WARM_ROUNDS = 2
 END_TO_END = ["setup_s", "pass_s", "op_p50_s", "op_tail_s"]
 LAYER_UNITS = {
     "plan.ms": "ms", "plan.queries": "count", "plan.exchanges": "count",
@@ -53,6 +52,7 @@ LAYER_UNITS = {
     "tasks.gc_ms": "ms", "tasks.failed": "count", "slots.util": "ratio",
     "shuffle.write_mb": "MB", "shuffle.read_mb": "MB", "shuffle.records": "count",
     "spill.mb": "MB", "scan.mb": "MB", "scan.rows": "count",
+    "store.write_mb": "MB", "store.write_rows": "count", "store.write_amp": "ratio",
     "stream.triggers": "count", "stream.input_rows": "count",
     "stream.trigger_p50_ms": "ms", "stream.trigger_tail_ms": "ms",
     "stream.latestOffset_ms": "ms", "stream.queryPlanning_ms": "ms",
@@ -132,7 +132,7 @@ def build(root, bdir):
 
 
 def check_rows(check_dir, rows, expected):
-    """Canonical hash of each row's warm-up output against the oracle's."""
+    """Canonical hash of each row's checked output against the oracle's."""
     import pyarrow.parquet as pq
     bad = {}
     for row in rows:
@@ -158,10 +158,9 @@ def check_rows(check_dir, rows, expected):
 
 def java_cmd(cp, work):
     opens = [a for p in ADD_OPENS for a in ("--add-opens", f"{p}=ALL-UNNAMED")]
-    # C1 only: a run lasts under a minute, too short for C2 to settle. Two
-    # GC threads and a fixed initial heap leave the cores to the task threads.
+    # Two GC threads and a fixed initial heap leave the cores to the task threads.
     return ["java", *opens, "-Xms2g", "-Xmx4g", "-XX:+UseG1GC", "-XX:ParallelGCThreads=2",
-            "-XX:ConcGCThreads=1", "-XX:TieredStopAtLevel=1",
+            "-XX:ConcGCThreads=1",
             f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}", "-cp", cp, "perfbench.Main"]
 
 
@@ -178,7 +177,7 @@ def run_workload(args, workload, bdir, cp):
     cmd = java_cmd(cp, work) + [
         "--mode", "run", "--workload", workload, "--seed", str(args.seed),
         "--seconds", str(args.seconds), "--trace", str(args.trace),
-        "--cores", str(cores), "--warm", str(WARM_ROUNDS), "--out", out, "--work", work]
+        "--cores", str(cores), "--out", out, "--work", work]
     if rows is None:
         corpus = os.path.join(work, "corpus")
         gen_corpus.write(corpus, args.seed, CORPUS_SCALE)
@@ -211,9 +210,9 @@ def run_workload(args, workload, bdir, cp):
             expected = json.load(f)
         mismatched = check_rows(os.path.join(out, "check"), rows, expected)
         checked = len(rows)
-    for w in res["warm"]:
+    for w in res["warm"] + res["checks"]:
         if w["err"]:
-            mismatched.setdefault(w["name"], f"warm-up failed: {w['err']}")
+            mismatched.setdefault(w["name"], f"{w['phase']} call failed: {w['err']}")
     measured = [o for o in res["ops"] if o["phase"] in ("timed", "traced")]
     failed, attempted, failing = metrics.failures(measured, mismatched)
 

@@ -6,7 +6,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.SparkEntry
 import graft.apps.Apps
@@ -20,12 +22,14 @@ import graft.ext.PlanCache
   * It records raw timings and, in a traced run, spans; `run.py` turns them
   * into metrics and checks the outputs. Arguments are `--key value` pairs:
   *
-  *   --mode run --workload W --seed N --seconds S --trace 0|1 --cores C --warm K
+  *   --mode run --workload W --seed N --seconds S --trace 0|1 --cores C
   *     --out DIR --work DIR (--rows a,b,c --data DIR | --corpus DIR)
   *   --mode oracle-sql --out FILE
   */
 object Main {
-  private final case class Op(name: String, timed: () => Unit, warm: () => Unit)
+  /** An operation returns its result; each call writes it with `noop`.
+    * `checked` rows have their result checked against the oracle's. */
+  private final case class Op(name: String, result: () => Dataset[_], checked: Boolean)
   private final case class OpRec(id: Long, name: String, phase: String, pass: Int,
                                  start: Double, end: Double, err: Option[String])
 
@@ -36,6 +40,16 @@ object Main {
     ("sorted_multiset", Apps.SortedMultisetAgg.map, Apps.SortedMultisetAgg.reduce),
     ("file_count", Apps.FileCount.map, Apps.FileCount.reduce))
 
+  /** Warm-up rounds at the timed data, per workload, with the default
+    * tiered JIT. On a 4-core box `mr_corpus` rounds fell from about 5.7 s
+    * to 1.8 s by the fifth and by a few percent more up to the tenth;
+    * `stream_maintain`'s first round takes about 20 s and its second
+    * about 12 s, within 20% of a timed pass. More rounds would not fit the
+    * run time. */
+  private val WarmRounds = Map("mr_corpus" -> 8, "stream_maintain" -> 2)
+
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
+
   private val nano0 = System.nanoTime()
   private val epoch0 = System.currentTimeMillis().toDouble
   /** Epoch milliseconds on the monotonic clock, comparable with Spark's event times. */
@@ -45,12 +59,12 @@ object Main {
     val opt = args.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
     opt("mode") match {
       case "oracle-sql" =>
-        Files.write(Paths.get(opt("out")), Json(SparkEntry.oracleSql).getBytes(UTF_8))
+        json.writeValue(new java.io.File(opt("out")), SparkEntry.oracleSql)
       case "run" => run(opt)
     }
   }
 
-  private def noop(df: org.apache.spark.sql.Dataset[_]): Unit =
+  private def noop(df: Dataset[_]): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   private def gcMs: Double = ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -88,16 +102,13 @@ object Main {
         val dir = opt("corpus")
         val files = new java.io.File(dir).listFiles.map(_.getPath).sorted.toSeq
         MrApps.map { case (name, m, r) =>
-          val job = () => noop(MapReduce.result(spark, files, m, r))
-          Op(name, job, job)
+          Op(name, () => MapReduce.result(spark, files, m, r), checked = false)
         }
       case _ =>
         val data = opt("data")
         opt("rows").split(",").toSeq.map { row =>
           val fn = SparkEntry.queries(row)
-          Op(row, () => noop(fn(spark, data)),
-            // the warm-up call also writes the row's result for the output check
-            () => fn(spark, data).coalesce(1).write.mode("overwrite").parquet(s"$out/check/$row"))
+          Op(row, () => fn(spark, data), checked = true)
         }
     }
 
@@ -116,33 +127,44 @@ object Main {
       rec
     }
 
-    // Warm-up at the timed data: JIT, codegen and PlanCache builds. The
-    // first round also writes each row's result for the output check.
-    val warm = (0 until opt("warm").toInt).flatMap { round =>
-      ops.map { op =>
+    // Warm-up at the timed data, with the calls the timed passes make:
+    // JIT, codegen and PlanCache builds.
+    val lastResult = scala.collection.mutable.Map.empty[String, Dataset[_]]
+    def callOp(op: Op, phase: String, pass: Int): OpRec = call(op.name, phase, pass, () => {
+      val df = op.result()
+      lastResult(op.name) = df
+      noop(df)
+    })
+    val warm = Seq.newBuilder[(OpRec, Int, Int)]
+    val roundS = (0 until WarmRounds(opt("workload"))).map { round =>
+      val rs = nowMs
+      ops.foreach { op =>
         val before = PlanCache.size
-        val r = call(op.name, "warm", round, if (round == 0) op.warm else op.timed)
-        (r, before, PlanCache.size)
+        val r = callOp(op, "warm", round)
+        warm += ((r, before, PlanCache.size))
       }
+      (nowMs - rs) / 1e3
     }
     val setupS = (nowMs - t0) / 1e3
-
-    val mrCheck =
-      if (opt("workload") == "mr_corpus") checkMapReduce(spark, opt("corpus")) else Nil
 
     val rng = new scala.util.Random(opt("seed").toLong)
     val recs = Seq.newBuilder[OpRec]
     val passes = Seq.newBuilder[Map[String, Any]]
     var pass = 0
+    // Passes that fit in `budget` seconds, at least one: a later pass starts
+    // only if one more pass as long as the last still ends within the budget,
+    // so that a workload of long passes does not overrun it by a pass.
     def passesFor(phase: String, budget: Double): Map[String, Double] = {
       val gc0 = gcMs
       val jit0 = jitMs
       val start = nowMs
       var n = 0
-      while (n == 0 || nowMs - start < budget * 1e3) {
+      var last = 0.0
+      while (n == 0 || nowMs - start + last <= budget * 1e3) {
         val ps = nowMs
-        rng.shuffle(ops).foreach(op => recs += call(op.name, phase, pass, op.timed))
+        rng.shuffle(ops).foreach(op => recs += callOp(op, phase, pass))
         passes += Map("pass" -> pass, "phase" -> phase, "start" -> ps, "end" -> nowMs)
+        last = nowMs - ps
         pass += 1
         n += 1
       }
@@ -162,9 +184,7 @@ object Main {
           Map("ok" -> (if (r.err.isEmpty) 1.0 else 0.0))))
       val w = Files.newBufferedWriter(Paths.get(out, "spans.jsonl"), UTF_8)
       try (opSpans ++ tracer.spans.asScala).foreach { s =>
-        w.write(Json(Map("kind" -> s.kind, "name" -> s.name, "id" -> s.id,
-          "parent" -> s.parent, "op" -> s.op, "start" -> s.start, "end" -> s.end,
-          "attrs" -> s.attrs)))
+        w.write(json.writeValueAsString(s))
         w.newLine()
       } finally w.close()
     } else {
@@ -176,17 +196,28 @@ object Main {
     val heap = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
     jvm += "retained_heap_mb" -> heap
 
+    // The output checks, after the measured passes so that they disturb
+    // neither the warm-up nor the timing: each row's last result, written
+    // once. A streaming row's result reads the sink or store its call left
+    // behind, so the row is not run again.
+    val checks = ops.filter(op => op.checked && lastResult.contains(op.name)).map(op =>
+      call(op.name, "check", 0, () =>
+        lastResult(op.name).coalesce(1).write.mode("overwrite").parquet(s"$out/check/${op.name}")))
+    val mrCheck =
+      if (opt("workload") == "mr_corpus") checkMapReduce(spark, opt("corpus")) else Nil
+
     def rec(r: OpRec): Map[String, Any] = Map("id" -> r.id, "name" -> r.name,
       "phase" -> r.phase, "pass" -> r.pass, "start" -> r.start, "end" -> r.end,
       "err" -> r.err)
     val result = Map(
       "workload" -> opt("workload"), "cores" -> cores,
-      "session_s" -> sessionS, "setup_s" -> setupS,
-      "warm" -> warm.map { case (r, b, a) => rec(r) ++ Map("plancache_before" -> b, "plancache_after" -> a) },
+      "session_s" -> sessionS, "setup_s" -> setupS, "warm_round_s" -> roundS,
+      "warm" -> warm.result().map { case (r, b, a) => rec(r) ++ Map("plancache_before" -> b, "plancache_after" -> a) },
+      "checks" -> checks.map(rec),
       "ops" -> recs.result().map(rec), "passes" -> passes.result(),
       "mr_check" -> mrCheck, "jvm" -> jvm.result(),
       "plancache_entries" -> PlanCache.size)
-    Files.write(Paths.get(out, "result.json"), Json(result).getBytes(UTF_8))
+    json.writeValue(new java.io.File(out, "result.json"), result)
     spark.stop()
   }
 
@@ -209,27 +240,4 @@ object Main {
         "oracle_rows" -> lines.size, "sequential_s" -> seqS)
     }
   }
-}
-
-/** Minimal JSON writer for the harness's own records. */
-object Json {
-  def apply(v: Any): String = v match {
-    case null | None => "null"
-    case Some(x) => apply(x)
-    case s: String => quote(s)
-    case b: Boolean => b.toString
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => quote(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
-    case xs: Iterable[_] => xs.map(apply).mkString("[", ",", "]")
-    case other => quote(other.toString)
-  }
-  private def quote(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

@@ -3,6 +3,7 @@
     python3 -m unittest discover -s perfbench -p 'test_*.py'
 """
 import os
+import statistics
 import sys
 import tempfile
 import unittest
@@ -45,6 +46,27 @@ class TailRule(unittest.TestCase):
         # 20 samples: ten above would be the median, not a tail
         self.assertEqual(metrics.tail([float(i) for i in range(20)])[1], 90)
         self.assertEqual(metrics.tail([float(i) for i in range(99)])[1], 90)
+
+
+class MedianOperation(unittest.TestCase):
+    def test_median_of_per_operation_medians(self):
+        # times in ms; per-operation medians 1, 3, 5 and 9 s
+        ops = [op(i, n, 0, t) for i, (n, t) in enumerate(
+            [("a", 1000), ("a", 1000), ("a", 4000), ("b", 3000), ("b", 3000),
+             ("c", 5000), ("c", 5000), ("d", 9000), ("d", 8000), ("d", 9000)])]
+        self.assertEqual(metrics.op_p50(ops), 4.0)
+
+    def test_slowest_sample_of_one_kind_does_not_move_it(self):
+        def ops(a):
+            return [op(i, n, 0, t) for i, (n, t) in enumerate(
+                [("a", x) for x in a] + [("b", 300), ("b", 310), ("b", 320)])]
+        fast, slow = ops([100, 110, 120]), ops([100, 110, 290])
+        self.assertAlmostEqual(metrics.op_p50(fast), 0.21)
+        self.assertAlmostEqual(metrics.op_p50(slow), 0.21)
+        # the median of all samples pooled falls in the gap and moves
+        pooled = [statistics.median((o["end"] - o["start"]) / 1e3 for o in x)
+                  for x in (fast, slow)]
+        self.assertAlmostEqual(pooled[1] - pooled[0], 0.085)
 
 
 class IntervalUnion(unittest.TestCase):
@@ -130,6 +152,29 @@ class JobAttribution(unittest.TestCase):
         by_op = metrics.attribute(spans, self.OPS)
         self.assertEqual([s["id"] for s in by_op[1]], ["t"])
         self.assertEqual([s["id"] for s in by_op[2]], ["p"])
+
+
+class StoreLayer(unittest.TestCase):
+    def test_writes_per_pass_and_amplification(self):
+        mb = 1024.0 * 1024.0
+        ops = [dict(op(1, "ingest", 0, 100), phase="traced"),
+               dict(op(2, "ingest", 100, 200), phase="traced")]
+        res = {"workload": "stream_maintain", "ops": ops, "mr_check": [], "warm": [],
+               "passes": [{"phase": "traced", "start": 0, "end": 100},
+                          {"phase": "traced", "start": 100, "end": 200},
+                          {"phase": "timed", "start": -100, "end": 0}],
+               "plancache_entries": 0,
+               "jvm": {"traced": {"gc_ms": 0, "jit_ms": 0}, "code_cache_mb": 1,
+                       "retained_heap_mb": 1}}
+        io = {"run_ms": 10, "input_bytes": 4 * mb, "output_bytes": mb, "output_records": 30}
+        spans = [span("job", 10, 20, 1, "j1"), span("job", 110, 120, 2, "j2"),
+                 span("stage", 10, 20, -1, "s1", "j1", io),
+                 span("stage", 110, 120, -1, "s2", "j2", io),
+                 span("stage", 300, 310, -1, "s3", "j9", io)]  # no op's job
+        m = metrics.per_layer(res, spans, 4)
+        self.assertEqual(m["store.write_mb"], 1.0)
+        self.assertEqual(m["store.write_rows"], 30)
+        self.assertEqual(m["store.write_amp"], 0.25)
 
 
 class CanonHash(unittest.TestCase):
