@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TaskContext
 import graft.apps.Apps
@@ -16,10 +15,7 @@ import graft.engine.{MapReduce, SequentialOracle}
   * src/mrapps/jobcount.go:34-46).
   */
 class ChaosSpec extends SparkSpec {
-  private val corpusDir = Paths.get("/root/reference/src/main")
-  private lazy val corpusFiles: Seq[String] =
-    Files.list(corpusDir).iterator().asScala
-      .map(_.toString).filter(_.matches(".*/pg-.*\\.txt")).toSeq.sorted
+  private def corpusFiles = MrCorpus.files
 
   test("first-attempt map failures are retried to an oracle-equal result") {
     import spark.implicits._
@@ -38,11 +34,7 @@ class ChaosSpec extends SparkSpec {
       .mapGroups((k, rows) => (k, Apps.SortedMultisetAgg.reduce(k, rows.map(_._2))))
       .collect().toSeq
 
-    val corpusInMem = corpusFiles.map { p =>
-      (p.substring(p.lastIndexOf('/') + 1),
-        new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
-    }
-    val oracle = SequentialOracle.run(corpusInMem,
+    val oracle = SequentialOracle.run(MrCorpus.inMemory,
       Apps.SortedMultisetAgg.map, Apps.SortedMultisetAgg.reduce)
     assert(engine.sortBy(_._1) == oracle.sortBy(_._1))
     // 4 map records per file (SortedMultisetAgg) × 8 files, each counted
@@ -75,16 +67,37 @@ class ChaosSpec extends SparkSpec {
       }
       .collect().toSeq
 
-    val corpusInMem = corpusFiles.map { p =>
-      (p.substring(p.lastIndexOf('/') + 1),
-        new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
-    }
-    val oracle = SequentialOracle.run(corpusInMem,
+    val oracle = SequentialOracle.run(MrCorpus.inMemory,
       Apps.SortedMultisetAgg.map, Apps.SortedMultisetAgg.reduce)
     assert(engine.sortBy(_._1) == oracle.sortBy(_._1))
     // reduce retries recompute from shuffle files: every map record ran
     // exactly once despite the injected reduce-stage failures
     assert(mapRuns.value == 8)
+  }
+
+  test("first-attempt map failures mid-fold leave no partial combine in the wc result") {
+    // wc's reduce is combinable, so each map task folds its tokens into
+    // a per-task map before the shuffle; a crash partway through the
+    // token iterator must discard that attempt's partial sums, or the
+    // retried counts would exceed the oracle's
+    ChaosSpec.midFoldCrashes.set(0)
+    val crashyWc: MapReduce.MapF = (file, contents) => {
+      val tc = TaskContext.get()
+      val crash = tc.attemptNumber() == 0 && tc.partitionId() % 2 == 0
+      Apps.WordCount.map(file, contents).zipWithIndex.map { case (kv, i) =>
+        if (crash && i == 1000) {
+          ChaosSpec.midFoldCrashes.incrementAndGet()
+          throw new RuntimeException("injected mid-fold crash (chaos spec)")
+        }
+        kv
+      }
+    }
+    val engine = MapReduce.result(spark, corpusFiles, crashyWc, Apps.WordCount.reduce)
+      .collect().toSeq
+    val oracle = SequentialOracle.run(MrCorpus.inMemory, Apps.WordCount.map,
+      (_, values) => values.size.toString) // the reference's len(values)
+    assert(ChaosSpec.midFoldCrashes.get() > 0, "no map attempt crashed: the check is vacuous")
+    assert(engine.sortBy(_._1) == oracle.sortBy(_._1))
   }
 
   test("iterative graph ops converge oracle-equal under injected task failures") {
@@ -138,4 +151,10 @@ class ChaosSpec extends SparkSpec {
     assert(kcChaos == kcClean,
       "kCore diverged from the clean run under injected task failures")
   }
+}
+
+object ChaosSpec {
+  /** Injected crashes, JVM-global: a failed task's accumulator updates
+    * are dropped, and tasks see a deserialized copy of spec state. */
+  val midFoldCrashes = new AtomicInteger(0)
 }
